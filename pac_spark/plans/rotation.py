@@ -130,43 +130,14 @@ _REPO = os.path.dirname(
 #   unpinned) — span bounds now come straight off the pruned events
 #   scan; measured 0.475 s after the change.
 FORCE_HOIST: tuple[str, ...] = (
-    # r12 starter list: RESET at the top of the round (the r11 entries
-    # all sat inside the r11 cap and came back hash-green, so their
+    # R13 FORCE_HOIST STARTER LIST: EMPTY as of r12 end. All 8 r12
+    # entries (the CC-loop broadcast family er_clusters/er_consolidated/
+    # er_approved/er_links/dedup_canonical_docs/semantic_dedup, plus
+    # sssp_from_hub and levenshtein_neardup_pairs) sat inside the r12
+    # cap and are hash_match=true in CORRECTNESS_r12.json, so their
     # newest driver evidence post-dates their change and they may
-    # legally ride the r12 tail). Grown in-round as r12 changes land;
-    # every addition names the change that voids the spec's tail
-    # evidence.
-    #
-    # r12 OPTIMIZATION round, CC-loop broadcast (VERDICT r11 top item):
-    # connected_components now byte-gates a broadcast of the endpoint-
-    # sized label frame into the per-round edge join and the pointer-
-    # doubling self-join — a physical-plan change in every consumer of
-    # the shared CC loop, so ALL of them are forced (the r11 verdict's
-    # stated done-criterion for this change):
-    "er_clusters",
-    "er_consolidated",
-    "er_approved",
-    "er_links",
-    "dedup_canonical_docs",
-    # trade_graph_components is STAGED, not registered — it cannot take
-    # a cap slot; its CC-loop change is gated by the staged 3-SF local
-    # oracle (tests/test_staged_specs.py) like every queued operator.
-    "semantic_dedup",
-    # r12: sssp_from_hub's pre-loop jobs restructured — the hub and
-    # the node count now both read one pinned degree frame instead of
-    # paying a separate edge-wide distinct exchange (VERDICT r11
-    # what's-wrong-#2). Plan changed -> forced.
-    "sssp_from_hub",
-    # r12: levenshtein_neardup_pairs verify switched to the 3-arg
-    # thresholded (banded-DP early-exit) levenshtein with k =
-    # max_len div 5 — expression/plan change, published rows proven
-    # identical (test_r12_optimizations + oracle drive) -> forced.
-    "levenshtein_neardup_pairs",
-    # r12 substrate, NOT forced per the classification policy above:
-    # the defensive _session_shuffle_parts parse in the graph/CC/IVF
-    # loops and stream_shuffle_parts (ADVICE r11 #1/#5) is an
-    # execution-knob guard with no logical-plan change on integer-conf
-    # runtimes; the atomic BENCH_DETAIL write is bench-file-only.
+    # legally ride the tail. Grown in-round as changes land; every
+    # addition names the change that voids the spec's tail evidence.
 )
 
 # r9 VERIFIED DRAINED (VERDICT r8 next-#6): the ER-LSH janino 64 KB
@@ -460,9 +431,10 @@ STAGED_QUEUE: tuple[str, ...] = (
 #    function + its harmonic-centrality readout + the delete-d
 #    jackknife SE + the language-ID confusion matrix (+ its streaming
 #    twin) + lift-ranked collocations + HRW shard rebalance), all
-#    3-SF-oracle-green from birth; r12 capacity = 14 mandatory
-#    2nd-greens (this round's registrations) + 1 forced (language_id)
-#    + 29 = 44 <= 50
+#    3-SF-oracle-green from birth. Cap as regenerated from the r1-r12
+#    history: 0 mandatory (every registered spec has two consecutive
+#    driver hash-greens) + 0 forced + 50 staleness fill, so registering
+#    the whole queue (29 mandatory) still fits the cap of 50.
 
 
 def career_greens(repo: str = _REPO) -> dict[str, list[int]]:

@@ -672,6 +672,8 @@ def test_plan_audit_counters_on_known_plans(spark, sf_dir):
     assertions above on plans whose shape is already pinned, and the
     four newest staged operators get their scale budgets enforced
     through it."""
+    import re
+
     from pac_spark.operators.curation import priority_sample_docs
     from pac_spark.operators.relational import q6_forecast_revenue
     from pac_spark.operators.temporal import (
@@ -680,7 +682,12 @@ def test_plan_audit_counters_on_known_plans(spark, sf_dir):
     )
     from pac_spark.operators.text import phrase_match_docs
     from pac_spark.operators.stats import weighted_percentiles_price_by_flag
-    from pac_spark.plans.audit import assert_scale_legal, plan_audit
+    from pac_spark.plans.audit import (
+        _NODE_NAME,
+        _split_cached_subtrees,
+        assert_scale_legal,
+        plan_audit,
+    )
 
     q6 = plan_audit(q6_forecast_revenue(spark, sf_dir))
     assert q6.scans == 1 and q6.cartesian_products == 0
@@ -696,10 +703,29 @@ def test_plan_audit_counters_on_known_plans(spark, sf_dir):
                        max_exchanges=3)
     assert_scale_legal(weighted_percentiles_price_by_flag(spark, sf_dir),
                        max_scans=1, max_exchanges=4)
-    # phrase match: m+0 posting scans (one per chained word is fine at
-    # m=2 — the filter is pushed), no cartesian
-    pm = assert_scale_legal(phrase_match_docs(spark, sf_dir))
-    assert pm.pushed_filters
+    # phrase match: the pinned posting frame is the ONE corpus scan for
+    # any phrase length m (every per-word branch reads the cache), and
+    # the query-word filter runs inside the pin's build, below any
+    # exchange — the words are selected before the shuffle. The filter
+    # is on a posexplode output, so it can never reach a parquet
+    # footer: PushedFilters is not the invariant here.
+    pm = phrase_match_docs(spark, sf_dir)
+    assert_scale_legal(pm, max_scans=1)
+    _, builds = _split_cached_subtrees(_exec_plan(pm))
+    assert builds, "posting frame is no longer pinned"
+    for build in builds.values():
+        nodes = [
+            (m.group(1), line)
+            for line in build.splitlines()
+            if (m := _NODE_NAME.match(line))
+        ]
+        assert any(
+            name == "Filter" and re.search(r"\btok#\d+", line)
+            for name, line in nodes
+        ), f"no word filter in the posting build:\n{build}"
+        assert not any("Exchange" in name for name, _ in nodes), (
+            f"shuffle inside the posting build:\n{build}"
+        )
     # latency percentiles: asof window + histogram — bounded exchanges
     assert_scale_legal(conversion_latency_by_hour(spark, sf_dir),
                        max_scans=1, max_exchanges=4)
