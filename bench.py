@@ -538,7 +538,7 @@ def main() -> None:
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
-    tmp_path = detail_path + ".tmp"
+    tmp_path = f"{detail_path}.{os.getpid()}.tmp"
     with open(tmp_path, "w") as fh:
         json.dump({**summary, "queries": timings}, fh, indent=1, sort_keys=True)
         fh.write("\n")

@@ -894,7 +894,6 @@ def source_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the global constants). Products accumulate in
     decimal(38,0): supply × K overflows BIGINT at real corpus sizes.
     """
-    from pac_spark.cache import pin
     from pac_spark.operators.text_core import tokens
 
     dec = "decimal(38,0)"

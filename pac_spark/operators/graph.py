@@ -25,12 +25,10 @@ PageRank is for.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pac_spark import catalog
+from pac_spark import catalog, loops
 from pac_spark.cache import checkpoint, pin
 
 __all__ = [
@@ -78,74 +76,6 @@ __all__ = [
 RANK_SCALE = 10**12  # rank micro-units: total initial mass
 PR_ITERATIONS = 10
 DAMPING_PCT = 85  # 0.85 damping as an integer percentage
-
-
-# serialized estimate per (node: long, rank: long) broadcast row —
-# two 8-byte values plus UnsafeRow/broadcast-table overhead
-_RANK_ROW_BYTES = 48
-
-# one warning per process for an unparseable broadcast threshold conf
-_WARNED_UNPARSEABLE_THRESHOLD = False
-
-
-def _broadcast_threshold(spark: SparkSession) -> int:
-    """The session's spark.sql.autoBroadcastJoinThreshold in bytes
-    (0 when broadcasting is disabled with -1). Explicit broadcast()
-    hints bypass this threshold, so loop operators that hint must
-    re-apply it themselves (ADVICE r8)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("k", 1 << 10),
-        ("m", 1 << 20),
-        ("g", 1 << 30),
-        ("t", 1 << 40),
-        ("p", 1 << 50),
-    ):
-        if raw.rstrip("b").endswith(suffix):
-            raw, mult = raw.rstrip("b")[: -len(suffix)], m
-            break
-    else:
-        raw = raw.removesuffix("b")
-    try:
-        val = int(raw) * mult
-    except ValueError:
-        # unparseable conf -> 0, the always-correct shuffle path: a
-        # session that set a garbage threshold may have MEANT to
-        # disable broadcasting, and silently assuming the 10MB default
-        # would re-enable per-iteration broadcasts (ADVICE r9). Warn
-        # once so a merely-malformed threshold (stray whitespace, an
-        # unsupported suffix) is diagnosable instead of silently
-        # degrading every loop broadcast to a shuffle join (ADVICE
-        # r10).
-        global _WARNED_UNPARSEABLE_THRESHOLD
-        if not _WARNED_UNPARSEABLE_THRESHOLD:
-            _WARNED_UNPARSEABLE_THRESHOLD = True
-            warnings.warn(
-                "spark.sql.autoBroadcastJoinThreshold is unparseable "
-                f"({spark.conf.get('spark.sql.autoBroadcastJoinThreshold')!r});"
-                " treating as 0 — loop operators will use shuffle joins"
-                " instead of broadcasts",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        val = 0
-    return max(val, 0)
-
-
-def _session_shuffle_parts(spark: SparkSession) -> int | None:
-    """The session's spark.sql.shuffle.partitions as an int, or None
-    when the conf is non-integer (e.g. ``"auto"`` on runtimes with
-    their own adaptive sizing — ADVICE r11). Loop operators SKIP their
-    scoped partition override entirely in that case: such a runtime is
-    already sizing partitions itself, and a bare int() would raise
-    ValueError out of the query instead of degrading gracefully."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return None
 
 
 def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,47 +156,19 @@ def pagerank(edges: DataFrame, iterations: int = PR_ITERATIONS) -> DataFrame:
     # 10 pure-overhead jobs. |src set| vs |node set| — one count on the
     # (pinned, tiny) degree frame the loop needs anyway, no extra join.
     has_dangling = deg.count() < n_nodes
-    # Loop parallelism follows the MEASURED graph size, not the
-    # session default: a corpus-tuned spark.sql.shuffle.partitions
-    # pays pure task-scheduling overhead per iteration on small
-    # graphs. The per-iteration working set has TWO scales — the
-    # rank/update frames are node-sized, but the join probe and the
-    # pre-combine groupBy input are EDGE-sized, so nodes/250k alone
-    # collapses parallelism on dense graphs (1M nodes with 100 edges
-    # each is 100M join rows in 4 tasks). Size by whichever is
-    # larger: ~250k nodes or ~1M edge rows per task; floored at 4 for
-    # a parallel head and capped at the session default so big graphs
-    # keep full parallelism. Measured at sf0.1 (16k nodes): 32 -> 4
-    # partitions is ~7.5s -> ~5.2s warm for the 10-iteration loop.
-    # Set/restore discipline as in sources.compaction.compact; results
-    # are partition-count-invariant (integer arithmetic,
-    # property-tested). edges.count() reads the already-pinned frame.
+    # The per-iteration working set has two scales: the rank/update
+    # frames are node-sized, but the join probe and the pre-combine
+    # groupBy input are edge-sized, so the loop sizes by both.
+    # edges.count() reads the already-pinned frame.
     n_edges = edges.count()
     spark = edges.sparkSession
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(
-            session_parts,
-            max(4, -(-n_nodes // 250_000), -(-n_edges // 1_000_000)),
-        )
-        spark.conf.set(parts_key, str(loop_parts))
-    # Rank frames are node-sized: below the gate, broadcasting them
-    # into the edge join (and the node-sized contrib into the update
-    # join) removes TWO of the three per-iteration shuffles — only the
-    # map-side-combined groupBy(dst) remains. The explicit hint
-    # BYPASSES spark.sql.autoBroadcastJoinThreshold, so the gate must
-    # do that check itself: estimated bytes (two longs + row overhead
-    # per node, re-broadcast every iteration) against the session's
-    # own threshold — a fixed row count risked multi-ten-MB broadcast
-    # builds on executors whose operator sized the threshold smaller
-    # (ADVICE r8). Past the gate the plan falls back to the shuffle
-    # joins that scale to billion-node graphs. Join strategy cannot
-    # change the integer arithmetic, so results are identical on both
-    # paths (partition-invariance is property-tested).
-    bcast_ranks = n_nodes * _RANK_ROW_BYTES <= _broadcast_threshold(spark)
-    try:
+    # Rank frames are node-sized: broadcasting them into the edge join
+    # (and the node-sized contrib into the update join) removes two of
+    # the three per-iteration shuffles — only the map-side-combined
+    # groupBy(dst) remains.
+    bcast_ranks = loops.fits_broadcast(spark, n_nodes)
+    parts = loops.loop_parts(spark, nodes=n_nodes, edges=n_edges)
+    with loops.scoped_conf(spark, loops.SHUFFLE_PARTITIONS, parts):
         ranks = checkpoint(nodes.select("node", F.lit(init).alias("rank")))
         for i in range(iterations):
             rank_side = F.broadcast(ranks) if bcast_ranks else ranks
@@ -316,8 +218,6 @@ def pagerank(edges: DataFrame, iterations: int = PR_ITERATIONS) -> DataFrame:
                 ranks = pin(next_ranks)
             else:
                 ranks = next_ranks
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return ranks
 
 
@@ -626,16 +526,13 @@ def two_hop_reach_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop1 = F.broadcast(anchors).join(
         edges, F.col("anchor") == F.col("src")
     ).select("anchor", "degree", F.col("dst").alias("mid"))
-    # r11 (guide §3.1): hop1 is anchored-bounded — EXACTLY
-    # Σ degree(anchor) rows, a 1-row scalar off the K-row anchor frame
-    # — so below the session's broadcast threshold it broadcasts into
-    # the hop-2 join and the pinned edge frame is probed in place
-    # instead of re-shuffled (SortMergeJoin → BroadcastHashJoin).
-    # Past the gate (huge-degree anchors) the shuffle join stands.
-    # Same-JVM interleaved A/B at sf0.1 (min-of-4, warm):
-    # 3.16 s -> 2.43 s; value-identical by join semantics.
+    # hop1 is anchored-bounded — EXACTLY Σ degree(anchor) rows, a
+    # 1-row scalar off the K-row anchor frame — so when it fits it
+    # broadcasts into the hop-2 join and the pinned edge frame is
+    # probed in place instead of re-shuffled. Its rows carry three
+    # longs, so the estimate doubles the two-long row.
     hop1_rows = anchors.agg(F.sum("degree")).collect()[0][0] or 0
-    if hop1_rows * _RANK_ROW_BYTES * 2 <= _broadcast_threshold(spark):
+    if loops.fits_broadcast(spark, 2 * hop1_rows):
         hop1 = F.broadcast(hop1)
     hop2 = hop1.join(
         edges.withColumnRenamed("src", "mid"), "mid"
@@ -720,25 +617,14 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
         )
     )
-    # r11 (guide §2.4/§3.1, the PageRank loop discipline ported): the
-    # doomed frame is node-bounded and its exact row count is already
-    # in hand (the loop's own early-exit scalar), so below the
-    # session's broadcast threshold it broadcasts into BOTH anti-joins
-    # — the checkpointed edge frame is probed in place instead of
-    # being re-shuffled twice per peel round — and loop shuffle
-    # parallelism follows the measured edge count. Same-JVM
-    # interleaved A/B at sf0.1 (min-of-4, warm): 5.63 s -> 4.03 s.
-    # Anti-join semantics are join-strategy-invariant, so results are
-    # identical on both paths.
+    # The doomed frame is node-bounded and its exact row count is
+    # already in hand (the loop's own early-exit scalar), so when it
+    # fits it broadcasts into BOTH anti-joins — the checkpointed edge
+    # frame is probed in place instead of being re-shuffled twice per
+    # peel round.
     n_edges = edges.count()
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(session_parts, max(4, -(-n_edges // 1_000_000)))
-        spark.conf.set(parts_key, str(loop_parts))
-    threshold = _broadcast_threshold(spark)
-    try:
+    parts = loops.loop_parts(spark, edges=n_edges)
+    with loops.scoped_conf(spark, loops.SHUFFLE_PARTITIONS, parts):
         for _ in range(KCORE_ROUNDS):
             doomed = pin(
                 edges.groupBy("src")
@@ -751,7 +637,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             doom_side = (
                 F.broadcast(doomed)
-                if n_doomed * _RANK_ROW_BYTES <= threshold
+                if loops.fits_broadcast(spark, n_doomed)
                 else doomed
             )
             edges = checkpoint(
@@ -759,8 +645,6 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                     doom_side, edges.dst == doomed.node, "left_anti"
                 )
             )
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return (
         edges.groupBy("src")
         .agg(F.count("*").alias("core_degree"))
@@ -994,30 +878,15 @@ def sssp_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (frontier → 0); a K-hop bounded readout never reaches that
     # regime by construction.
     #
-    # r11 (guide §2.4/§3.1, the PageRank loop discipline ported —
-    # distinct from the reverted frontier idea: no extra join, no
-    # extra materialization): the distance table is node-bounded, so
-    # below the session's broadcast threshold it broadcasts into the
-    # per-round relax join — the pinned edge frame is probed in place
-    # instead of re-shuffled every round — and loop shuffle
-    # parallelism follows the measured graph size. Same-JVM
-    # interleaved A/B at sf0.1 (min-of-4, warm): 6.67 s -> 5.24 s.
-    # Min-plus relaxation is join-strategy- and partition-count-
-    # invariant (integer min over the same multiset), so results are
-    # identical on both paths.
+    # The distance table is node-bounded, so when it fits it
+    # broadcasts into the per-round relax join — the pinned edge frame
+    # is probed in place instead of re-shuffled every round (no extra
+    # join or materialization, unlike the reverted frontier idea).
     n_nodes = deg.count()  # reads the pinned degree frame, no new pass
     n_edges = edges.count()
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(
-            session_parts,
-            max(4, -(-n_nodes // 250_000), -(-n_edges // 1_000_000)),
-        )
-        spark.conf.set(parts_key, str(loop_parts))
-    bcast_dist = n_nodes * _RANK_ROW_BYTES <= _broadcast_threshold(spark)
-    try:
+    bcast_dist = loops.fits_broadcast(spark, n_nodes)
+    parts = loops.loop_parts(spark, nodes=n_nodes, edges=n_edges)
+    with loops.scoped_conf(spark, loops.SHUFFLE_PARTITIONS, parts):
         for i in range(SSSP_HOPS):
             dist_side = F.broadcast(dist) if bcast_dist else dist
             relax = dist_side.join(edges, dist.node == edges.src).select(
@@ -1028,8 +897,6 @@ def sssp_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
             # round materializes and truncates lineage; in-between
             # rounds just persist
             dist = checkpoint(new) if i % 2 == 1 else pin(new)
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return dist.select("node", "dist").orderBy("node")
 
 
@@ -1062,17 +929,12 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     with bit shifts on BOTH engines (DuckDB's BIGINT ``//`` is
     float-backed — the budget-allocation lesson).
 
-    r11 (guide §2.4/§3.1, the measured PageRank loop discipline
-    ported): the label frame is node-sized, so below the session's
-    own broadcast threshold it broadcasts into the per-round edge
-    join — the pinned edge frame is then probed in place instead of
-    re-shuffled every round — and loop shuffle parallelism follows
-    the measured graph size (max(4, nodes/250k, edges/1M), capped at
-    the session default) instead of paying 32-task scheduling
-    overhead per tiny round. Same-JVM interleaved A/B at sf0.1
-    (min-of-4, warm): 9.17 s -> 5.37 s. Join strategy and partition
-    count cannot change the argmax (count DESC, label ASC is a total
-    order per src), so results are identical on both paths.
+    The label frame is node-sized, so when it fits it broadcasts into
+    the per-round edge join — the pinned edge frame is then probed in
+    place instead of re-shuffled every round — and the loop's
+    partition count follows the measured graph (``pac_spark.loops``).
+    Neither can change the argmax (count DESC, label ASC is a total
+    order per src).
     """
     # pinned: consumed LPA_ROUNDS + 1 times (the initial node set +
     # one join per round) — unpinned, each round replays the
@@ -1084,19 +946,9 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = pin(labels)
     n_nodes = labels.count()
     n_edges = edges.count()
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    session_parts = _session_shuffle_parts(spark)
-    if session_parts is not None:
-        loop_parts = min(
-            session_parts,
-            max(4, -(-n_nodes // 250_000), -(-n_edges // 1_000_000)),
-        )
-        spark.conf.set(parts_key, str(loop_parts))
-    # label rows are two longs, the PageRank rank-row shape — reuse
-    # its per-row byte estimate against the session's own threshold
-    bcast_labels = n_nodes * _RANK_ROW_BYTES <= _broadcast_threshold(spark)
-    try:
+    bcast_labels = loops.fits_broadcast(spark, n_nodes)
+    parts = loops.loop_parts(spark, nodes=n_nodes, edges=n_edges)
+    with loops.scoped_conf(spark, loops.SHUFFLE_PARTITIONS, parts):
         for i in range(LPA_ROUNDS):
             label_side = F.broadcast(labels) if bcast_labels else labels
             votes = (
@@ -1121,8 +973,6 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             # checkpoint rounds pin — the next round reads labels
             # TWICE (vote join + self-vote branch)
             labels = checkpoint(new) if i % 2 == 1 else pin(new)
-    finally:
-        spark.conf.set(parts_key, prev_parts)
     return labels.select(
         F.when(F.col("node") % 4 == 1, F.lit("customer"))
         .otherwise(F.lit("supplier"))

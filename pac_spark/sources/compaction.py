@@ -30,6 +30,8 @@ import math
 
 from pyspark.sql import DataFrame
 
+from pac_spark.loops import scoped_conf
+
 __all__ = ["compact", "compact_clustered", "compact_zordered"]
 
 
@@ -49,22 +51,11 @@ def compact(
     """Rewrite ``df`` to ``dest`` with size-targeted files via the AQE
     REBALANCE hint. Row content is preserved exactly; file boundaries
     are chosen by AQE from measured sizes."""
-    spark = df.sparkSession
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    # conf.get returns None when the key was never explicitly set (the
-    # registered default is not surfaced) — restore must UNSET in that
-    # case or the override leaks into every later query on the session
-    prev = spark.conf.get(key, None)
-    try:
-        if advisory_partition_mb is not None:
-            spark.conf.set(key, f"{advisory_partition_mb}m")
+    advisory = None if advisory_partition_mb is None else f"{advisory_partition_mb}m"
+    with scoped_conf(
+        df.sparkSession, "spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory
+    ):
         _write(df.hint("rebalance"), dest, max_records_per_file)
-    finally:
-        if advisory_partition_mb is not None:
-            if prev is not None:
-                spark.conf.set(key, prev)
-            else:
-                spark.conf.unset(key)
 
 
 def compact_clustered(

@@ -49,6 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pac_spark import loops
 from pac_spark.streaming.stream_exec import (
     run_to_memory,
     stream_events,
@@ -533,11 +534,7 @@ def _run_ivm_fold(ev_stream, partial_fn, merge_fn, parts=None):
     # every per-batch partial + merge here shuffles matrix-/key-sized
     # frames, and the count applies per micro-batch
     spark = ev_stream.sparkSession
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    if parts is not None:
-        spark.conf.set(parts_key, str(parts))
-    try:
+    with loops.scoped_conf(spark, loops.SHUFFLE_PARTITIONS, parts):
         q = (
             ev_stream.writeStream.foreachBatch(fold)
             .outputMode("update")
@@ -545,9 +542,6 @@ def _run_ivm_fold(ev_stream, partial_fn, merge_fn, parts=None):
             .start()
         )
         q.awaitTermination()
-    finally:
-        if parts is not None:
-            spark.conf.set(parts_key, prev_parts)
     if state["view"] is None:
         raise RuntimeError("stream delivered no batches")
     with cache._LOCK:

@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pac_spark import catalog
+from pac_spark import catalog, loops
 from pac_spark.functions.exact import money_sum
 from pac_spark.streaming.windows import TS_FMT, windowed_agg
 
@@ -57,11 +57,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return catalog.normalize_events_ts(stream)
 
 
-# per-partition input-byte target for the stream partition rule below;
-# env-overridable so a cluster profile can re-tune without code change
-_STREAM_PART_BYTES = int(
-    os.environ.get("PAC_STREAM_PART_BYTES", str(16 << 20))
-)
+# per-partition input-byte target for the stream partition rule below
+_STREAM_PART_BYTES = 16 << 20
 
 
 def stream_shuffle_parts(
@@ -76,7 +73,7 @@ def stream_shuffle_parts(
     overhead repeats every micro-batch, not once per query (guide
     §2.2: fewer, larger partitions; the state-store analog of the
     graph loops' measured rule). Derived from the SOURCE's on-disk
-    bytes — max(4, bytes / PAC_STREAM_PART_BYTES) capped at the
+    bytes — max(4, bytes / _STREAM_PART_BYTES) capped at the
     session default — so it is scale-adaptive, not tuned to this box:
     a TB-scale source keeps the session's own setting, and the
     session default itself stays whatever the cluster set. Returns
@@ -103,12 +100,8 @@ def stream_shuffle_parts(
             nbytes = os.path.getsize(path)
     except OSError:
         return None
-    try:
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        # non-integer session conf (e.g. "auto"): the runtime is sizing
-        # partitions itself — skip the override rather than raise
-        # (ADVICE r11)
+    cur = loops.session_shuffle_parts(spark)
+    if cur is None:
         return None
     return min(cur, max(4, -(-nbytes // _STREAM_PART_BYTES)))
 
@@ -125,11 +118,7 @@ def run_to_memory(
     (from :func:`stream_shuffle_parts`) scopes the shuffle-partition
     count — i.e. the state-store count — to the drain; the session
     setting is restored before returning."""
-    parts_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(parts_key)
-    if parts is not None:
-        spark.conf.set(parts_key, str(parts))
-    try:
+    with loops.scoped_conf(spark, loops.SHUFFLE_PARTITIONS, parts):
         query = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -138,9 +127,6 @@ def run_to_memory(
             .start()
         )
         query.awaitTermination()
-    finally:
-        if parts is not None:
-            spark.conf.set(parts_key, prev_parts)
     return spark.table(name)
 
 

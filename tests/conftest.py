@@ -23,6 +23,22 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture
+def gate_decisions(monkeypatch):
+    """Every ``loops.fits_broadcast`` result, in call order, while the
+    real gate still decides — proves which join branch a loop took."""
+    from pac_spark import loops
+
+    real, taken = loops.fits_broadcast, []
+
+    def spy(spark, n_rows):
+        taken.append(real(spark, n_rows))
+        return taken[-1]
+
+    monkeypatch.setattr(loops, "fits_broadcast", spy)
+    return taken
+
+
 @pytest.fixture(scope="session")
 def duck(sf_dir):
     """DuckDB connection with the same views the driver registers."""
@@ -60,3 +76,27 @@ def assert_oracle_match(spark_df, duck_rel):
     assert len(srows) == len(orows), f"row count: spark={len(srows)} oracle={len(orows)}"
     for i, (a, b) in enumerate(zip(srows, orows)):
         assert a == b, f"row {i} differs:\n  spark : {a}\n  oracle: {b}"
+
+
+def write_pendant_triangle(path) -> None:
+    """A co-purchase ``lineitem.parquet`` under ``path``: a triangle
+    with a 3-node pendant chain off node 3, plus an isolated edge. Its
+    2-core is the triangle, reached only after several peel rounds."""
+    import pandas as pd
+
+    # every edge = one part pair ordered together in TWO orders
+    edges = [(1, 2), (2, 3), (1, 3),  # triangle
+             (3, 4), (4, 5), (5, 6),  # pendant chain off node 3
+             (7, 8)]                   # isolated edge
+    rows = []
+    oid = 0
+    for a, b in edges:
+        for _ in range(2):
+            rows += [(oid, a), (oid, b)]
+            oid += 1
+    pd.DataFrame(
+        {
+            "l_orderkey": [o for o, _ in rows],
+            "l_partkey": [p for _, p in rows],
+        }
+    ).to_parquet(os.path.join(path, "lineitem.parquet"))

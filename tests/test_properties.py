@@ -775,7 +775,7 @@ def test_broadcast_threshold_parses_and_warns_on_garbage():
     malformed conf is diagnosable (ADVICE r10)."""
     import warnings as W
 
-    from pac_spark.operators import graph
+    from pac_spark import loops
 
     class FakeConf:
         def __init__(self, v):
@@ -797,17 +797,17 @@ def test_broadcast_threshold_parses_and_warns_on_garbage():
         ("-1", 0),
         ("0", 0),
     ]:
-        assert graph._broadcast_threshold(FakeSpark(raw)) == want, raw
+        assert loops.broadcast_threshold(FakeSpark(raw)) == want, raw
 
-    graph._WARNED_UNPARSEABLE_THRESHOLD = False
+    loops._WARNED_UNPARSEABLE_THRESHOLD = False
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        assert graph._broadcast_threshold(FakeSpark("10 MB garbage")) == 0
-        assert graph._broadcast_threshold(FakeSpark("10 MB garbage")) == 0
+        assert loops.broadcast_threshold(FakeSpark("10 MB garbage")) == 0
+        assert loops.broadcast_threshold(FakeSpark("10 MB garbage")) == 0
     warned = [c for c in caught if issubclass(c.category, RuntimeWarning)]
     assert len(warned) == 1, "exactly one warning per process"
     assert "autoBroadcastJoinThreshold" in str(warned[0].message)
-    graph._WARNED_UNPARSEABLE_THRESHOLD = False
+    loops._WARNED_UNPARSEABLE_THRESHOLD = False
 
 
 def test_lifetime_cents_rounding_half_away_from_zero():

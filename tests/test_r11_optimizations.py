@@ -69,23 +69,43 @@ def test_fused_pq_codebooks_match_per_subspace_loops(spark, sf_dir):
         assert fused[m] == per_m, f"subspace {m} codebook diverged"
 
 
-def test_graph_loops_invariant_to_broadcast_gate(spark, sf_dir):
+def test_graph_loops_invariant_to_broadcast_gate(
+    spark, sf_dir, tmp_path, gate_decisions
+):
     """lpa/sssp/kcore results must be identical with loop broadcasts
-    disabled (threshold -1 forces the shuffle-join fallback path)."""
+    disabled (threshold -1 forces the shuffle-join fallback path). The
+    gate spy proves run 1 (threshold 1g) took the broadcast branch and
+    run 2 the shuffle branch, so the comparison is between two plans.
+    kcore also runs on a crafted graph: the fixture's co-purchase graph
+    is already a 2-core, so its peel loop never reaches the gate."""
     from pac_spark.operators.graph import (
         kcore_parts,
         lpa_communities,
         sssp_from_hub,
     )
+    from tests.conftest import write_pendant_triangle
 
+    write_pendant_triangle(tmp_path)
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
-    for fn in (lpa_communities, sssp_from_hub, kcore_parts):
-        with_bcast = _rows(fn(spark, sf_dir))
-        release_caches(all_generations=True)
-        spark.conf.set(key, "-1")
+    for fn, data, gated in (
+        (lpa_communities, sf_dir, True),
+        (sssp_from_hub, sf_dir, True),
+        (kcore_parts, sf_dir, False),
+        (kcore_parts, str(tmp_path), True),
+    ):
         try:
-            without = _rows(fn(spark, sf_dir))
+            gate_decisions.clear()
+            spark.conf.set(key, "1g")
+            with_bcast = _rows(fn(spark, data))
+            if gated:
+                assert gate_decisions and all(gate_decisions), fn.__name__
+            release_caches(all_generations=True)
+            gate_decisions.clear()
+            spark.conf.set(key, "-1")
+            without = _rows(fn(spark, data))
+            if gated:
+                assert gate_decisions and not any(gate_decisions), fn.__name__
         finally:
             spark.conf.set(key, prev)
         release_caches(all_generations=True)

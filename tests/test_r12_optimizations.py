@@ -25,20 +25,28 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_connected_components_invariant_to_broadcast_gate(spark, sf_dir):
+def test_connected_components_invariant_to_broadcast_gate(
+    spark, sf_dir, gate_decisions
+):
     """CC-loop results must be identical with loop broadcasts disabled
     (threshold -1 forces the shuffle-join fallback path) — the r12
     byte-gated broadcast of the endpoint-sized label frame into the
-    per-round edge join and the pointer-doubling self-join."""
+    per-round edge join and the pointer-doubling self-join. A spy on
+    the gate proves run 1 (threshold 1g) took the broadcast branch and
+    run 2 the shuffle branch."""
     from pac_spark.operators.graph import trade_graph_components
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     prev = spark.conf.get(key)
-    with_bcast = _rows(trade_graph_components(spark, sf_dir))
-    release_caches(all_generations=True)
-    spark.conf.set(key, "-1")
     try:
+        spark.conf.set(key, "1g")
+        with_bcast = _rows(trade_graph_components(spark, sf_dir))
+        assert gate_decisions == [True], "CC loop did not broadcast at 1g"
+        release_caches(all_generations=True)
+        gate_decisions.clear()
+        spark.conf.set(key, "-1")
         without = _rows(trade_graph_components(spark, sf_dir))
+        assert gate_decisions == [False], "CC loop still broadcast at -1"
     finally:
         spark.conf.set(key, prev)
     release_caches(all_generations=True)

@@ -1937,25 +1937,10 @@ def test_kcore_crafted(spark, tmp_path):
     """A triangle with a 3-node pendant chain: the chain peels away
     over multiple synchronous rounds (deepest node first), leaving
     exactly the triangle at degree 2 — and an isolated edge vanishes."""
-    import pandas as pd
-
-    # every edge = one part pair ordered together in TWO orders
-    edges = [(1, 2), (2, 3), (1, 3),  # triangle
-             (3, 4), (4, 5), (5, 6),  # pendant chain off node 3
-             (7, 8)]                   # isolated edge
-    rows = []
-    oid = 0
-    for a, b in edges:
-        for _ in range(2):
-            rows += [(oid, a), (oid, b)]
-            oid += 1
-    pd.DataFrame(
-        {
-            "l_orderkey": [o for o, _ in rows],
-            "l_partkey": [p for _, p in rows],
-        }
-    ).to_parquet(tmp_path / "lineitem.parquet")
     from pac_spark.operators.graph import kcore_parts
+    from tests.conftest import write_pendant_triangle
+
+    write_pendant_triangle(tmp_path)
 
     got = {r["part_id"]: r["core_degree"] for r in kcore_parts(spark, str(tmp_path)).collect()}
     assert got == {1: 2, 2: 2, 3: 2}
